@@ -74,26 +74,16 @@ def _managed(engine, table: str):
 
 
 def _table_state(td) -> tuple[list[str], list[str]]:
-    return (
-        [os.path.basename(p) for p in store._parts(td)],
-        [os.path.basename(p) for p in store._tombstone_parts(td)],
-    )
+    """Part basenames (what refresh bookkeeping compares) and pending
+    tombstone paths (what every read of the listed parts anti-joins)."""
+    parts, tombs = store.table_files(td)
+    return [os.path.basename(p) for p in parts], tombs
 
 
-def _read_parts(engine, td, basenames: list[str]) -> DataFrame:
-    schema = td.require_schema()
-    if not basenames:
-        return engine.spark.createDataFrame([], schema)
-    df = engine.spark.read.schema(schema).parquet(
-        *[os.path.join(td.path, b) for b in basenames]
+def _read_parts(engine, td, basenames: list[str], tombs: list[str]) -> DataFrame:
+    return store.read_files(
+        engine.spark, td, [os.path.join(td.path, b) for b in basenames], tombs
     )
-    tombs = store._tombstone_parts(td)
-    if tombs and td.id_col:
-        dead = (
-            engine.spark.read.parquet(*tombs).select(td.id_col).distinct()
-        )
-        df = df.join(dead, td.id_col, "left_anti")
-    return df
 
 
 def _joined(engine, meta: dict, left_df: DataFrame, right_df: DataFrame) -> DataFrame:
@@ -149,8 +139,10 @@ def refresh(engine, name: str) -> dict:
 def _refresh(engine, name: str, meta: dict, initial: bool) -> dict:
     ltd = _managed(engine, meta["left"])
     rtd = _managed(engine, meta["right"])
-    lparts, ltombs = _table_state(ltd)
-    rparts, rtombs = _table_state(rtd)
+    lparts, ltomb_paths = _table_state(ltd)
+    rparts, rtomb_paths = _table_state(rtd)
+    ltombs = [os.path.basename(t) for t in ltomb_paths]
+    rtombs = [os.path.basename(t) for t in rtomb_paths]
     lapplied = set(meta.get("left_parts", ()))
     rapplied = set(meta.get("right_parts", ()))
     needs_rebuild = (
@@ -168,8 +160,8 @@ def _refresh(engine, name: str, meta: dict, initial: bool) -> dict:
         full = _joined(
             engine,
             meta,
-            _read_parts(engine, ltd, lparts),
-            _read_parts(engine, rtd, rparts),
+            _read_parts(engine, ltd, lparts, ltomb_paths),
+            _read_parts(engine, rtd, rparts, rtomb_paths),
         )
         names = _append_state(engine, name, full, meta)
         meta.update(
@@ -190,10 +182,10 @@ def _refresh(engine, name: str, meta: dict, initial: bool) -> dict:
     # ΔL ⋈ R_new  ∪  L_old ⋈ ΔR  (each new×new pair meets exactly once,
     # in the first term). R_new is the LISTED rparts, not a re-scan of
     # the directory — see the rebuild branch comment.
-    dl = _read_parts(engine, ltd, lnew)
-    dr = _read_parts(engine, rtd, rnew)
-    l_old = _read_parts(engine, ltd, sorted(lapplied))
-    r_all = _read_parts(engine, rtd, rparts)
+    dl = _read_parts(engine, ltd, lnew, ltomb_paths)
+    dr = _read_parts(engine, rtd, rnew, rtomb_paths)
+    l_old = _read_parts(engine, ltd, sorted(lapplied), ltomb_paths)
+    r_all = _read_parts(engine, rtd, rparts, rtomb_paths)
     delta = _joined(engine, meta, dl, r_all).unionByName(
         _joined(engine, meta, l_old, dr)
     )

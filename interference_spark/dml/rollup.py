@@ -266,10 +266,11 @@ def _refresh(engine, name: str, meta: dict, initial: bool) -> dict:
     td = engine.catalog.get(meta["source"])
     keys = meta["keys"]
     aggs = {k: tuple(v) for k, v in meta["aggs"].items()}
-    parts_now = [os.path.basename(p) for p in store._parts(td)]
-    tombs_now = [os.path.basename(p) for p in store._tombstone_parts(td)]
+    parts, tombs = store.table_files(td)
+    parts_now = [os.path.basename(p) for p in parts]
+    tombs_now = [os.path.basename(p) for p in tombs]
     applied = set(meta.get("applied_parts", ()))
-    new = [p for p in parts_now if p not in applied]
+    new = [p for p in parts if os.path.basename(p) not in applied]
 
     needs_rebuild = (
         initial
@@ -277,7 +278,7 @@ def _refresh(engine, name: str, meta: dict, initial: bool) -> dict:
         or any(p not in set(parts_now) for p in applied)  # rewrite/compaction
     )
     if needs_rebuild:
-        full = _partial(store.read_managed(engine.spark, td), keys, aggs)
+        full = _partial(store.read_files(engine.spark, td, parts, tombs), keys, aggs)
         meta["applied_parts"] = parts_now
         meta["applied_tombstones"] = tombs_now
         _commit_state(engine, name, full, meta)
@@ -285,19 +286,9 @@ def _refresh(engine, name: str, meta: dict, initial: bool) -> dict:
     if not new:
         return {"mode": "noop", "files_read": 0}
 
-    delta = engine.spark.read.schema(td.require_schema()).parquet(
-        *[os.path.join(td.path, p) for p in new]
-    )
-    if tombs_now and td.id_col:
-        # tombstones unchanged since last refresh, but a delta row could
-        # carry an already-dead id (re-append after delete): filter like
-        # read_managed does, over the delta only
-        dead = (
-            engine.spark.read.parquet(*store._tombstone_parts(td))
-            .select(td.id_col)
-            .distinct()
-        )
-        delta = delta.join(dead, td.id_col, "left_anti")
+    # tombstones unchanged since last refresh, but a delta row could carry
+    # an already-dead id (re-append after delete): the read rule filters it
+    delta = store.read_files(engine.spark, td, new, tombs)
     merged = (
         read(engine, name)
         .unionByName(_partial(delta, keys, aggs))

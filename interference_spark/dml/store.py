@@ -14,15 +14,20 @@ this module keeps is the *operation surface*:
                          Structured-Streaming file source over the table
                          directory sees the snapshot and then every new file.
 * ``upsert``           — persist-by-@Id (reference
-                         ``persistent/Table.java:1187-1409``): anti-join +
-                         union + atomic swap (the Delta-less MERGE).
+                         ``persistent/Table.java:1187-1409``): one MERGE over
+                         a computed file set.  With a tombstone pending, every
+                         part is rewritten (folding the tombstones in);
+                         otherwise only the parts whose parquet-footer id
+                         min/max overlaps the upserted ids' [min, max].  The
+                         chosen parts minus the new ids, plus the new rows,
+                         are written as fresh parts and the old ones retired.
 * ``add_tombstones`` / ``maybe_compact`` — THE delete path (transactional
                          delete / CEP ``purge``, routed via
                          ``session.py`` commit): deletes write id
                          tombstone files (O(deleted ids), never a table
-                         rewrite); ``read_managed`` anti-joins them out,
-                         and compaction folds them into data files only
-                         past a file-count/bytes threshold.
+                         rewrite); every read anti-joins them out
+                         (``read_files``), and compaction folds them into
+                         data files only past a file-count/bytes threshold.
 * ``apply_threshold``  — ``@Threshold(n)`` ring-buffer retention
                          (``core/Threshold.java``): keep the newest n rows
                          by id.
@@ -39,15 +44,21 @@ instead.
 from __future__ import annotations
 
 import glob
+import json
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyarrow.fs import FileSystem
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import TableDef
-from ..errors import InvalidParameter
+from ..errors import InvalidParameter, SnapshotUnavailable
+from ..pipeline import iterative_stage_conf
 
 
 def _parts(td: TableDef) -> list[str]:
@@ -64,27 +75,60 @@ def _tombstone_parts(td: TableDef) -> list[str]:
     return sorted(glob.glob(os.path.join(_tombstone_dir(td), "*.parquet")))
 
 
+def table_files(td: TableDef) -> tuple[list[str], list[str]]:
+    """The table's live part files and pending tombstone files (paths)."""
+    return _parts(td), _tombstone_parts(td)
+
+
 def init_table_dir(td: TableDef) -> None:
     os.makedirs(td.path, exist_ok=True)
 
 
-def read_managed(spark: SparkSession, td: TableDef) -> DataFrame:
-    """Current table contents = part files minus tombstoned ids.
+def read_files(
+    spark: SparkSession, td: TableDef, parts: list[str], tombstones: list[str]
+) -> DataFrame:
+    """Rows of ``parts`` minus the ids in ``tombstones`` — the one read rule
+    behind live reads, snapshots, upsert, rollups and join views.
 
     Tombstones are the poor-man's deletion vectors (Delta-style): PROCESS
     and streaming deletes append id files under ``_tombstones/`` instead of
     rewriting parts — crucial for PROCESS STREAM, whose own file source
-    would otherwise re-ingest rewritten part files as new data."""
+    would otherwise re-ingest rewritten part files as new data. They are
+    read with the id column's schema, so no Spark job infers one."""
     schema = td.require_schema()
-    files = _parts(td)
-    if not files:
+    if not parts:
         return spark.createDataFrame([], schema)
-    df = spark.read.schema(schema).parquet(*files)
-    tombs = _tombstone_parts(td)
-    if tombs and td.id_col:
-        dead = spark.read.parquet(*tombs).select(td.id_col).distinct()
-        df = df.join(dead, td.id_col, "left_anti")
+    df = spark.read.schema(schema).parquet(*parts)
+    if tombstones and td.id_col:
+        id_schema = T.StructType([schema[td.id_col]])
+        df = df.join(spark.read.schema(id_schema).parquet(*tombstones), td.id_col, "left_anti")
     return df
+
+
+def read_managed(spark: SparkSession, td: TableDef) -> DataFrame:
+    """Current table contents = part files minus tombstoned ids."""
+    return read_files(spark, td, *table_files(td))
+
+
+def _put_table(table: pa.Table, path: str) -> None:
+    """Driver-side write-then-rename: a crash mid-write must never leave a
+    torn parquet at a live path (one torn file breaks every later scan). The
+    tmp name is dot-prefixed so Spark's FileIndex ignores a crash leftover
+    too; rename within one fs is atomic."""
+    tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path) + ".tmp")
+    pq.write_table(table, tmp, compression="zstd")
+    os.rename(tmp, path)
+
+
+def _write_renamed(td: TableDef, df: DataFrame, dest_dir: str, prefix: str) -> None:
+    """Distributed write-then-rename: executors write to a tmp dir next to
+    the table dir, then each file moves into ``dest_dir`` under a fresh
+    ``<prefix>-<uuid>`` name (rename within one filesystem = atomic)."""
+    tmp = td.path + f".tmp-{uuid.uuid4().hex}"
+    df.write.mode("overwrite").parquet(tmp)
+    for f in glob.glob(os.path.join(tmp, "*.parquet")):
+        os.rename(f, os.path.join(dest_dir, f"{prefix}-{uuid.uuid4().hex}.parquet"))
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def add_tombstones(spark: SparkSession, td: TableDef, ids_df: DataFrame) -> None:
@@ -92,15 +136,7 @@ def add_tombstones(spark: SparkSession, td: TableDef, ids_df: DataFrame) -> None
     if td.id_col is None:
         raise InvalidParameter(f"table {td.name} has no @Id column")
     os.makedirs(_tombstone_dir(td), exist_ok=True)
-    tmp = td.path + f".tmp-{uuid.uuid4().hex}"
-    ids_df.select(td.id_col).write.mode("overwrite").parquet(tmp)
-    for f in glob.glob(os.path.join(tmp, "*.parquet")):
-        os.rename(
-            f, os.path.join(_tombstone_dir(td), f"ts-{uuid.uuid4().hex}.parquet")
-        )
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
+    _write_renamed(td, ids_df.select(td.id_col), _tombstone_dir(td), "ts")
 
 
 def add_tombstone_ids(td: TableDef, ids: list) -> None:
@@ -112,16 +148,13 @@ def add_tombstone_ids(td: TableDef, ids: list) -> None:
         raise InvalidParameter(f"table {td.name} has no @Id column")
     if not ids:
         return
-    id_field = next(f for f in td.require_schema().fields if f.name == td.id_col)
+    id_field = td.require_schema()[td.id_col]
     table = pa.Table.from_pydict(
         {td.id_col: list(ids)},
         schema=pa.schema([pa.field(td.id_col, _to_arrow(id_field.dataType))]),
     )
     os.makedirs(_tombstone_dir(td), exist_ok=True)
-    path = os.path.join(_tombstone_dir(td), f"ts-{uuid.uuid4().hex}.parquet")
-    tmp = os.path.join(_tombstone_dir(td), "." + os.path.basename(path) + ".tmp")
-    pq.write_table(table, tmp, compression="zstd")
-    os.rename(tmp, path)
+    _put_table(table, os.path.join(_tombstone_dir(td), f"ts-{uuid.uuid4().hex}.parquet"))
 
 
 # compaction triggers: tombstones are pure win until the anti-join's build
@@ -153,13 +186,10 @@ def maybe_compact(spark: SparkSession, td: TableDef) -> bool:
 
 def compact(spark: SparkSession, td: TableDef) -> None:
     """Physically apply tombstones and merge small part files."""
-    if not _tombstone_parts(td):
-        return
-    overwrite(td, read_managed(spark, td).coalesce(_target_parts(td)))
-
-
-def _new_part(td: TableDef) -> str:
-    return os.path.join(td.path, f"part-{uuid.uuid4().hex}.parquet")
+    parts, tombs = table_files(td)
+    if tombs:
+        live = read_files(spark, td, parts, tombs).coalesce(_n_parts(parts))
+        _rewrite(td, live, parts + tombs)
 
 
 def _arrow_table(td: TableDef, rows: list[dict]) -> pa.Table:
@@ -178,7 +208,8 @@ def stage_rows(spark: SparkSession, td: TableDef, rows: list[dict]) -> tuple[Dat
     MERGE path: a parallelize-based DataFrame drags a Python-runner stage
     into the merge plan, which under the output-sizing ``coalesce`` runs
     single-worker-serialized (measured: 4.5 s vs 0.9 s for the same 10k-row
-    upsert). A parquet scan keeps the whole merge JVM-side."""
+    upsert). A parquet scan keeps the whole merge JVM-side, and ``upsert``
+    reads the batch's id range from its footer."""
     path = td.path + f".stage-{uuid.uuid4().hex}.parquet"
     pq.write_table(_arrow_table(td, rows), path, compression="zstd")
     return spark.read.schema(td.require_schema()).parquet(path), path
@@ -190,44 +221,28 @@ def append_rows(td: TableDef, rows: list[dict]) -> str:
     what lets the ingest bench match the reference's ~100k obj/s figure."""
     if not rows:
         return ""
-    table = _arrow_table(td, rows)
-    path = _new_part(td)
-    # write-then-rename: a crash mid-write must never leave a torn parquet
-    # at a live part path (one torn file breaks every later scan). The tmp
-    # name is dot-prefixed so Spark's FileIndex ignores a crash leftover
-    # too; rename within one fs is atomic.
-    tmp = os.path.join(td.path, "." + os.path.basename(path) + ".tmp")
-    pq.write_table(table, tmp, compression="zstd")
-    os.rename(tmp, path)
+    path = os.path.join(td.path, f"part-{uuid.uuid4().hex}.parquet")
+    _put_table(_arrow_table(td, rows), path)
     return path
 
 
 def append_df(td: TableDef, df: DataFrame) -> None:
-    """Distributed append: executors write to a tmp dir, then the files move
-    into the table dir (rename within one filesystem = atomic-enough)."""
-    tmp = td.path + f".tmp-{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(tmp)
-    for f in glob.glob(os.path.join(tmp, "*.parquet")):
-        os.rename(f, _new_part(td))
-    import shutil
+    """Distributed append: new part files, existing ones untouched."""
+    _write_renamed(td, df, td.path, "part")
 
-    shutil.rmtree(tmp, ignore_errors=True)
+
+def _rewrite(td: TableDef, df: DataFrame, old: list[str]) -> None:
+    """Write ``df`` as new parts, then retire the ``old`` part/tombstone
+    files it replaces (snapshot-pinned files archive instead of vanishing)."""
+    _write_renamed(td, df, td.path, "part")
+    _retire_files(td, old)
 
 
 def overwrite(td: TableDef, df: DataFrame) -> None:
     """Replace table contents: write new parts, then remove old parts and
     any tombstones (content is physical again)."""
-    old = _parts(td)
-    tmp = td.path + f".tmp-{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(tmp)
-    for f in glob.glob(os.path.join(tmp, "*.parquet")):
-        os.rename(f, _new_part(td))
-    # snapshot-pinned files archive instead of vanishing (time travel)
-    _retire_files(td, old)
-    _retire_files(td, _tombstone_parts(td))
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
+    parts, tombs = table_files(td)
+    _rewrite(td, df, parts + tombs)
 
 
 def vacuum(td: TableDef) -> int:
@@ -239,8 +254,6 @@ def vacuum(td: TableDef) -> int:
     than the write itself, so only call vacuum when no writer is active
     (same single-writer rule as every mutation here).  Returns the number
     of artifacts removed."""
-    import shutil
-
     n = 0
     for d in glob.glob(td.path + ".tmp-*"):
         shutil.rmtree(d, ignore_errors=True)
@@ -288,133 +301,104 @@ def cluster_table(
     overwrite(td, out)
 
 
-# below this table size a one-pass full-rewrite MERGE beats the targeted
-# plan's three jobs (locate, rewrite-affected, append); above it, rewriting
-# the whole table per upsert is the thing that cannot scale
-FULL_REWRITE_MAX_BYTES = 512 << 20
-
-
 def _table_bytes(td: TableDef) -> int:
     return sum(os.path.getsize(f) for f in _parts(td))
 
 
 # rewrite paths size their output to ~128 MB parts: without this, every
-# full-rewrite MERGE/compact inherits the plan's task count (32+ on
-# local[32]) and the table's file count GROWS per upsert — the second
-# commit reads 42 tiny parts, the tenth reads hundreds (measured: commit
-# latency 1.5 s → 4.2 s between two identical upserts purely from file
-# growth). coalesce (no shuffle) keeps compute parallel at scale: a 10 GB
-# table still rewrites through 80 tasks, a 1 MB one through 1.
+# MERGE/compact inherits the plan's task count (32+ on local[32]) and the
+# table's file count GROWS per upsert — the second commit reads 42 tiny
+# parts, the tenth reads hundreds (measured: commit latency 1.5 s → 4.2 s
+# between two identical upserts purely from file growth). coalesce (no
+# shuffle) keeps compute parallel at scale: a 10 GB rewrite still runs
+# through 80 tasks, a 1 MB one through 1.
 TARGET_PART_BYTES = 128 << 20
 
 
-def _target_parts(td: TableDef, extra_bytes: int = 0) -> int:
-    return max(1, -(-(_table_bytes(td) + extra_bytes) // TARGET_PART_BYTES))
+def _n_parts(files: list[str]) -> int:
+    return max(1, -(-sum(os.path.getsize(f) for f in files) // TARGET_PART_BYTES))
 
 
-def upsert(
-    spark: SparkSession,
-    td: TableDef,
-    new_df: DataFrame,
-    full_rewrite_max_bytes: int = FULL_REWRITE_MAX_BYTES,
-) -> None:
+def _footer_range(path: str, id_col: str, filesystem=None) -> tuple | None:
+    """(min, max) of ``id_col`` from a parquet footer, or None when a row
+    group lacks exact statistics. Floating ids never count as exact:
+    parquet min/max leave NaN out."""
+    md = pq.read_metadata(path, filesystem=filesystem)
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = next(
+            (rg.column(c).statistics for c in range(rg.num_columns)
+             if rg.column(c).path_in_schema == id_col),
+            None,
+        )
+        if st is None or not st.has_min_max or isinstance(st.min, float):
+            return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return None if lo is None else (lo, hi)
+
+
+def _id_range(df: DataFrame, id_col: str) -> tuple:
+    """[min, max] of ``df``'s ids. A bare parquet scan (``stage_rows``'s
+    output, the commit path) answers from its footers with no Spark job;
+    any other DataFrame costs one aggregate job."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRelation":
+        try:
+            bounds = [
+                _footer_range(path, id_col, fs)
+                for fs, path in map(FileSystem.from_uri, df.inputFiles())
+            ]
+        except (OSError, ValueError):  # not a parquet file pyarrow can open
+            bounds = []
+        if bounds and None not in bounds:
+            return min(b[0] for b in bounds), max(b[1] for b in bounds)
+    return tuple(df.agg(F.min(id_col), F.max(id_col)).first())
+
+
+def _may_hold(bounds: tuple | None, lo, hi) -> bool:
+    if bounds is None:
+        return True
+    try:
+        return not (bounds[1] < lo or hi < bounds[0])
+    except TypeError:  # no range (empty batch), or incomparable stats
+        return True
+
+
+def upsert(spark: SparkSession, td: TableDef, new_df: DataFrame) -> None:
     """MERGE-by-id: update matching ids, insert the rest
     (reference persist(): ``persistent/Session.java:436-457``).
 
-    Small tables: one-pass full-rewrite merge. Large tables: targeted-
-    rewrite merge (the Delta MERGE file-pruning pattern) — an id-column
-    scan locates the part files that actually contain matched ids; ONLY
-    those parts are rewritten (minus matched rows) and the new rows land
-    as a fresh part. Write amplification is O(affected parts + new), not
-    O(table) — with id-clustered inserts (ring tables, incremental ids) an
-    upsert touches one or two parts of a 100 TB table.
+    One MERGE over a computed file set. With a tombstone pending, every
+    part is rewritten and the tombstones fold in (a re-inserted id must not
+    stay hidden). Otherwise only the parts whose footer id range overlaps
+    the new ids' [min, max] are rewritten (the Delta MERGE file-pruning
+    pattern, with no locate job): with id-clustered inserts (ring tables,
+    incremental ids) an upsert touches one or two parts of a 100 TB table.
+    The chosen parts minus the new ids, plus the new rows, are written as
+    ⌈bytes / TARGET_PART_BYTES⌉ parts and the old files retired.
     """
     if td.id_col is None:
         raise InvalidParameter(f"table {td.name} has no @Id column; use append")
+    parts, tombs = table_files(td)
+    if tombs:
+        rewrite = parts
+    else:
+        lo, hi = _id_range(new_df, td.id_col)
+        rewrite = [f for f in parts if _may_hold(_footer_range(f, td.id_col), lo, hi)]
     cols = [f.name for f in td.require_schema().fields]
-    files = _parts(td)
-    if not files:
-        append_df(td, new_df.select(*cols))
-        return
-    # scoped AQE conf (r12): every shuffle inside a MERGE is BATCH-sized
-    # by construction (new-id distinct, affected-part distinct) while the
-    # heavy bytes move through coalesce+write, so size-derived partition
-    # coalescing is safe at any scale and removes the 32-task floor each
-    # of the merge's small stages pays per commit (same rationale as
-    # pipeline.iterative_stage_conf; measured 2.66 -> 1.47 s on the
-    # 10k-upsert bench with these settings session-wide).
-    from ..pipeline import set_iterative_stage_conf, restore_stage_conf
-
-    _conf = set_iterative_stage_conf(spark)
-    try:
-        _upsert_body(spark, td, new_df, cols, files, full_rewrite_max_bytes)
-    finally:
-        restore_stage_conf(spark, _conf)
-
-
-def _upsert_body(
-    spark: SparkSession,
-    td: TableDef,
-    new_df: DataFrame,
-    cols: list[str],
-    files: list[str],
-    full_rewrite_max_bytes: int,
-) -> None:
-    if _tombstone_parts(td):
-        # tombstoned ids may be re-inserted by this upsert; make content
-        # physical first so the old tombstones can't hide the new rows
-        compact(spark, td)
-        files = _parts(td)
-    from pyspark.sql import functions as F
-
-    new_ids = new_df.select(td.id_col).distinct()
-    schema = td.require_schema()
-    if len(files) <= 2 or _table_bytes(td) <= full_rewrite_max_bytes:
-        # locating affected parts can't save enough — one-pass merge
-        cur = read_managed(spark, td)
-        merged = cur.join(
-            F.broadcast(new_ids), td.id_col, "left_anti"
-        ).unionByName(new_df.select(*cols))
-        overwrite(td, merged.coalesce(_target_parts(td)))
-        return
-    located = (
-        spark.read.schema(schema)
-        .parquet(*files)
-        .select(F.col(td.id_col), F.input_file_name().alias("__f"))
-        .join(F.broadcast(new_ids), td.id_col)
-        .select("__f")
-        .distinct()
+    merged = (
+        read_files(spark, td, rewrite, tombs)
+        .join(F.broadcast(new_df.select(td.id_col)), td.id_col, "left_anti")
+        .unionByName(new_df.select(*cols))
+        .coalesce(_n_parts(rewrite))
     )
-    # input_file_name() returns a URI (percent-encoded, file:// scheme) —
-    # comparing it against raw filesystem paths silently matches NOTHING
-    # for warehouses containing spaces/unicode, which would keep the old
-    # rows AND append the new ones (duplicate @Ids). Part names are
-    # uuid-unique within the table, so compare decoded basenames.
-    from urllib.parse import unquote, urlparse
-
-    located_names = {
-        os.path.basename(unquote(urlparse(r["__f"]).path))
-        for r in located.collect()
-    }
-    affected = {f for f in files if os.path.basename(f) in located_names}
-    if affected:
-        n_out = max(1, -(-sum(os.path.getsize(f) for f in affected) // TARGET_PART_BYTES))
-        survivors = (
-            spark.read.schema(schema)
-            .parquet(*sorted(affected))
-            .join(F.broadcast(new_ids), td.id_col, "left_anti")
-            .coalesce(n_out)
-        )
-        tmp = td.path + f".tmp-{uuid.uuid4().hex}"
-        survivors.write.mode("overwrite").parquet(tmp)
-        for f in glob.glob(os.path.join(tmp, "*.parquet")):
-            os.rename(f, _new_part(td))
-        # snapshot-pinned files archive instead of vanishing (time travel)
-        _retire_files(td, sorted(affected))
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    append_df(td, new_df.select(*cols))
+    # scoped AQE conf: the merge's shuffles are batch-sized while the
+    # heavy bytes move through coalesce+write, so size-derived partition
+    # coalescing is safe at any scale (see pipeline.iterative_stage_conf)
+    with iterative_stage_conf(spark):
+        _rewrite(td, merged, rewrite + tombs)
 
 
 def apply_threshold(spark: SparkSession, td: TableDef) -> None:
@@ -425,8 +409,6 @@ def apply_threshold(spark: SparkSession, td: TableDef) -> None:
     cur = read_managed(spark, td)
     if cur.count() <= td.threshold:
         return
-    from pyspark.sql import functions as F
-
     cutoff = (
         cur.select(td.id_col)
         .orderBy(F.desc(td.id_col))
@@ -438,8 +420,6 @@ def apply_threshold(spark: SparkSession, td: TableDef) -> None:
 
 
 def _to_arrow(dt) -> pa.DataType:
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.ByteType):
         return pa.int8()
     if isinstance(dt, T.ShortType):
@@ -482,8 +462,6 @@ def table_manifest(spark: SparkSession, td: TableDef) -> DataFrame:
     At 100 TB: hashing is embarrassingly parallel and IO-bound; run it once
     per immutable part at write/compact time and store incrementally
     rather than re-hashing the table per release."""
-    from pyspark.sql import functions as F
-
     files = _parts(td)
     if not files:
         return spark.createDataFrame(
@@ -513,8 +491,6 @@ def _zorder_key(cols: list[tuple[str, float, float]], bits: int = 16):
     """Interleaved-bit z-order key: each column range-bucketed to ``bits``
     bits over its [lo, hi) domain, buckets bit-interleaved so files sorted
     by the key are tight in EVERY dimension at once."""
-    from pyspark.sql import functions as F
-
     n = len(cols)
     buckets = []
     for name, lo, hi in cols:
@@ -548,8 +524,6 @@ def cluster_table_zorder(
     Domain bounds come from one cheap min/max pass (offline maintenance
     op, like `cluster_table`); cost is the same single range-shuffle +
     sort. At 100 TB run per partition directory."""
-    from pyspark.sql import functions as F
-
     n_dims = len(cluster_by)
     # the interleaved key must fit a signed long: bit position
     # (bits-1)*n + (n-1) ≤ 62 — cap bits rather than let shiftleft(·,63)
@@ -586,7 +560,7 @@ def cluster_table_zorder(
 # then the archive.  Dropping a snapshot releases its pins; files no longer
 # pinned by ANY snapshot are removed at drop time.  Appends never invalidate
 # snapshots (old manifests simply don't list the new files) — only rewrite
-# ops (upsert's targeted rewrite, compact, overwrite, clustering) archive.
+# ops (upsert, compact, overwrite, clustering) archive.
 
 
 def _snapshot_dir(td: TableDef) -> str:
@@ -609,8 +583,6 @@ def create_snapshot(td: TableDef) -> int:
     the next id from surviving manifests alone would re-issue an id after
     its snapshot was dropped, silently resolving a stale consumer-held id
     to a DIFFERENT table state instead of raising SnapshotUnavailable."""
-    import json
-
     os.makedirs(_snapshot_dir(td), exist_ok=True)
     seq_path = os.path.join(_snapshot_dir(td), "SEQ")
     last = 0
@@ -628,10 +600,11 @@ def create_snapshot(td: TableDef) -> int:
     with open(seq_tmp, "w") as fh:
         fh.write(str(sid))
     os.rename(seq_tmp, seq_path)
+    parts, tombs = table_files(td)
     meta = {
         "id": sid,
-        "parts": [os.path.basename(p) for p in _parts(td)],
-        "tombstones": [os.path.basename(p) for p in _tombstone_parts(td)],
+        "parts": [os.path.basename(p) for p in parts],
+        "tombstones": [os.path.basename(p) for p in tombs],
     }
     path = os.path.join(_snapshot_dir(td), f"snap-{sid:09d}.json")
     tmp = os.path.join(_snapshot_dir(td), f".snap-{sid:09d}.json.tmp")
@@ -642,8 +615,6 @@ def create_snapshot(td: TableDef) -> int:
 
 
 def list_snapshots(td: TableDef) -> list[dict]:
-    import json
-
     out = []
     for p in _snapshot_files(td):
         with open(p) as fh:
@@ -663,22 +634,16 @@ def _retire_files(td: TableDef, files: list[str]) -> None:
     """Delete files a mutation replaced — unless a snapshot pins them, in
     which case they move to the archive (rename within one fs = atomic)."""
     pinned = _pinned_basenames(td)
-    archived = False
     for f in files:
         if os.path.basename(f) in pinned:
             os.makedirs(_archive_dir(td), exist_ok=True)
             os.rename(f, os.path.join(_archive_dir(td), os.path.basename(f)))
-            archived = True
         else:
             os.remove(f)
-    if archived:
-        pass  # archive is append-only here; drop_snapshot reclaims
 
 
 def drop_snapshot(td: TableDef, snap_id: int) -> None:
     """Release a snapshot's pins and reclaim archive files nothing pins."""
-    from ..errors import SnapshotUnavailable
-
     path = os.path.join(_snapshot_dir(td), f"snap-{snap_id:09d}.json")
     if not os.path.exists(path):
         raise SnapshotUnavailable(f"snapshot {snap_id} of {td.name} not found")
@@ -694,10 +659,6 @@ def read_snapshot(spark: SparkSession, td: TableDef, snap_id: int) -> DataFrame:
     Reads with the current registered schema, so columns added after the
     snapshot surface as nulls (same contract as reading old part files
     after ALTER TABLE ADD COLUMN)."""
-    import json
-
-    from ..errors import SnapshotUnavailable
-
     path = os.path.join(_snapshot_dir(td), f"snap-{snap_id:09d}.json")
     if not os.path.exists(path):
         raise SnapshotUnavailable(f"snapshot {snap_id} of {td.name} not found")
@@ -719,16 +680,12 @@ def read_snapshot(spark: SparkSession, td: TableDef, snap_id: int) -> DataFrame:
             f"snapshot {snap_id} of {td.name} expired: {basename} is gone"
         )
 
-    schema = td.require_schema()
-    parts = [resolve(b, None) for b in meta["parts"]]
-    if not parts:
-        return spark.createDataFrame([], schema)
-    df = spark.read.schema(schema).parquet(*parts)
-    tombs = [resolve(b, "_tombstones") for b in meta["tombstones"]]
-    if tombs and td.id_col:
-        dead = spark.read.parquet(*tombs).select(td.id_col).distinct()
-        df = df.join(dead, td.id_col, "left_anti")
-    return df
+    return read_files(
+        spark,
+        td,
+        [resolve(b, None) for b in meta["parts"]],
+        [resolve(b, "_tombstones") for b in meta["tombstones"]],
+    )
 
 
 def snapshot_changes(
@@ -744,10 +701,6 @@ def snapshot_changes(
     (the overwhelming majority) are dropped by the struct-equality filter
     before anything leaves the join. No manifests are diffed — file-level
     diffs misclassify compaction/upsert survivor rewrites as churn."""
-    from pyspark.sql import functions as F
-
-    from ..errors import InvalidParameter
-
     if td.id_col is None:
         raise InvalidParameter(f"table {td.name} has no @Id column")
     a = read_snapshot(spark, td, from_id)

@@ -938,7 +938,7 @@ def q18_large_orders(spark, sf_dir):
     TakeOrderedAndProject.
 
     Both orderkey attachments carry shuffle_hash hints — the r7 100×
-    scale probe (tools/scaling_probe.py --tpch) caught two cliffs the
+    scale probe (a since-removed TPC-H scaling script) caught two cliffs the
     sf0.1 plan audit could not:
 
     * unhinted, the static planner BROADCAST the orders fact table (its

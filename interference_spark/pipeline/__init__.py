@@ -1,5 +1,6 @@
 """Training-data pipeline operators: dedup, similarity, text, multimodal."""
 
+import math
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
@@ -11,36 +12,46 @@ def lit_double_array(values) -> Column:
     of a ``F.lit`` per element (each Column op is a blocking py4j round
     trip — a dim-64 query vector costs ~65 trips, a planes×dim
     hyperplane matrix ~400, repeated on EVERY query construction).
-    Bit-identical to the lit loop: ``repr(float)`` round-trips and the
-    SQL parser's double conversion is correctly rounded (verified for
-    subnormals, max-double, -0.0)."""
+    Bit-identical to the lit loop for finite values: ``repr(float)``
+    round-trips and the SQL parser's double conversion is correctly
+    rounded (verified for subnormals, max-double, -0.0). NaN and ±inf
+    have no SQL literal, so an array holding one IS the lit loop."""
     vals = [float(v) for v in values]
     if not vals:
         return F.array().cast("array<double>")
+    if not all(map(math.isfinite, vals)):
+        return F.array(*[F.lit(v) for v in vals])
     return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
 
 
 def lit_double_matrix(rows) -> Column:
     """Literal ``array<array<double>>`` in one parse — see
     :func:`lit_double_array` for the py4j/bit-identity contract."""
-    inner = [
-        "array(" + ",".join(repr(float(v)) + "D" for v in row) + ")"
-        for row in rows
-    ]
-    if not inner:
+    rows = [[float(v) for v in row] for row in rows]
+    if not rows:
         return F.array().cast("array<array<double>>")
+    if not all(math.isfinite(v) for row in rows for v in row):
+        return F.array(*[F.array(*[F.lit(v) for v in row]) for row in rows])
+    inner = ["array(" + ",".join(repr(v) + "D" for v in row) + ")" for row in rows]
     return F.expr("array(" + ",".join(inner) + ")")
 
 
 def lit_int_array(values) -> Column:
     """Literal integer array in one parse.  Plain digit literals get the
-    same per-element INT-or-BIGINT typing rule as ``F.lit(int)``, and
-    ``array()`` applies the same widest-type coercion, so the element
-    type matches the lit-loop construction it replaces."""
+    same per-element INT-or-BIGINT typing rule as ``F.lit(int)`` (INT_MIN
+    included: the parser types ``-2147483648`` as INT), and ``array()``
+    applies the same widest-type coercion, so the element type matches the
+    lit-loop construction it replaces."""
     vals = [int(v) for v in values]
     if not vals:
         return F.array().cast("array<int>")
     return F.expr("array(" + ",".join(str(v) for v in vals) + ")")
+
+
+_ITER_CONFS = {
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+}
 
 
 @contextmanager
@@ -69,39 +80,22 @@ def iterative_stage_conf(spark):
     so only the iterative loops opt in.  Settings restore on exit even
     on error; caches built inside the scope keep their (size-derived)
     partitioning afterwards, which is exactly the point."""
-    saved = set_iterative_stage_conf(spark)
+    saved = {}
+    for k, v in _ITER_CONFS.items():
+        try:
+            saved[k] = spark.conf.get(k)
+        except Exception:  # noqa: BLE001 — unset key
+            saved[k] = None
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        restore_stage_conf(spark, saved)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
-
-_ITER_CONFS = {
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-}
-
-
-def set_iterative_stage_conf(spark) -> dict:
-    """Non-context form of :func:`iterative_stage_conf` for loops that
-    already manage a try/finally: apply the settings, return what to
-    hand back to :func:`restore_stage_conf`."""
-    old = {}
-    for k, v in _ITER_CONFS.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:  # noqa: BLE001 — unset key
-            old[k] = None
-        spark.conf.set(k, v)
-    return old
-
-
-def restore_stage_conf(spark, saved: dict) -> None:
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
 
 #: Ledger of DataFrames this package persist()ed on behalf of a returned
 #: plan (LSH hyperplane fingerprints, simhash fingerprints, shared GD

@@ -266,15 +266,16 @@ def train_from_words(
         raise ValueError(
             f"merges_per_round must be >= 1, got {merges_per_round}"
         )
-    from . import iterative_stage_conf
+    from . import iterative_stage_conf, register_cache
 
     spark = words.sparkSession
     rules: list[tuple[int, str, str, str, int]] = []
     with iterative_stage_conf(spark):
         # no eager count: the first round's pair-count collect populates
         # the persisted word table while scanning it, so a separate
-        # materialization job would be pure scheduler floor.
-        cur = words.persist()
+        # materialization job would be pure scheduler floor. Ledgered: with
+        # no merge round it is the returned word table, still cached.
+        cur = register_cache(words)
         rank = 1
         while rank <= n_merges:
             want = min(merges_per_round, n_merges - rank + 1)

@@ -1349,35 +1349,34 @@ def hash_kernel_classifier(
         ],
     ]
     wcols = ["wb"] + [f"wc{j}" for j in range(d)]
-    from . import restore_stage_conf, set_iterative_stage_conf
+    from . import iterative_stage_conf
 
     # scoped AQE conf (r12): `iters` tiny moment jobs + the cached
     # featurize — see pipeline.iterative_stage_conf for the rationale
-    _conf = set_iterative_stage_conf(spark)
-    try:
-        for _ in range(iters):
-            wrow = F.broadcast(
-                spark.createDataFrame(pd.DataFrame([list(w)], columns=wcols))
-            )
-            row = tf.crossJoin(wrow).agg(*agg_cols).first()
-            n = row["n"]
-            if not n:
-                raise ValueError(
-                    "hash_kernel_classifier: empty training slice — "
-                    "nothing to fit"
+    with iterative_stage_conf(spark):
+        try:
+            for _ in range(iters):
+                wrow = F.broadcast(
+                    spark.createDataFrame(pd.DataFrame([list(w)], columns=wcols))
                 )
-            # mirror the oracle's op chain: (S / n) / 1e8, then w - lr*g
-            w[0] = w[0] - lr * (row["sb"] / n / 1e8)
-            for j in range(d):
-                w[j + 1] = w[j + 1] - lr * (row[f"s{j}"] / n / 1e8)
-    except BaseException:
-        if shared:
-            feats.unpersist()
-        raise
-    finally:
-        restore_stage_conf(spark, _conf)
-        if not shared:
-            tf.unpersist()
+                row = tf.crossJoin(wrow).agg(*agg_cols).first()
+                n = row["n"]
+                if not n:
+                    raise ValueError(
+                        "hash_kernel_classifier: empty training slice — "
+                        "nothing to fit"
+                    )
+                # mirror the oracle's op chain: (S / n) / 1e8, then w - lr*g
+                w[0] = w[0] - lr * (row["sb"] / n / 1e8)
+                for j in range(d):
+                    w[j + 1] = w[j + 1] - lr * (row[f"s{j}"] / n / 1e8)
+        except BaseException:
+            if shared:
+                feats.unpersist()
+            raise
+        finally:
+            if not shared:
+                tf.unpersist()
 
     sf_feats = feats if shared else featurize(
         score, with_id=True, with_label=False
@@ -1539,37 +1538,36 @@ def _hash_kernel_sparse(
         GROUP BY z.bucket
     """
 
-    from . import restore_stage_conf, set_iterative_stage_conf
+    from . import iterative_stage_conf
 
-    _conf = set_iterative_stage_conf(spark)
-    tfa = sparse_feats(train, with_id=False).persist()
-    w = [0.0] * (d + 1)  # [bias, w_0..w_{d-1}]
-    try:
-        for _ in range(iters):
-            wdf = F.broadcast(
-                spark.createDataFrame(
-                    pd.DataFrame({"__b": [w[0]], "w": [w[1:]]}),
-                    schema="__b double, w array<double>",
+    with iterative_stage_conf(spark):
+        tfa = sparse_feats(train, with_id=False).persist()
+        w = [0.0] * (d + 1)  # [bias, w_0..w_{d-1}]
+        try:
+            for _ in range(iters):
+                wdf = F.broadcast(
+                    spark.createDataFrame(
+                        pd.DataFrame({"__b": [w[0]], "w": [w[1:]]}),
+                        schema="__b double, w array<double>",
+                    )
                 )
-            )
-            rows = spark.sql(
-                step_sql, tf=tfa, w=wdf
-            ).collect()  # ≤ d+1 narrow rows — the only driver traffic
-            by_bucket = {r["bucket"]: r for r in rows}
-            sent = by_bucket.pop(-1, None)
-            if sent is None:
-                raise ValueError(
-                    "hash_kernel_classifier: empty training slice — "
-                    "nothing to fit"
-                )
-            n = sent["c"]
-            # identical op chain to the dense path: (S / n) / 1e8, w - lr*g
-            w[0] = w[0] - lr * (sent["s"] / n / 1e8)
-            for b, r in by_bucket.items():
-                w[b + 1] = w[b + 1] - lr * (r["s"] / n / 1e8)
-    finally:
-        restore_stage_conf(spark, _conf)
-        tfa.unpersist()
+                rows = spark.sql(
+                    step_sql, tf=tfa, w=wdf
+                ).collect()  # ≤ d+1 narrow rows — the only driver traffic
+                by_bucket = {r["bucket"]: r for r in rows}
+                sent = by_bucket.pop(-1, None)
+                if sent is None:
+                    raise ValueError(
+                        "hash_kernel_classifier: empty training slice — "
+                        "nothing to fit"
+                    )
+                n = sent["c"]
+                # identical op chain to the dense path: (S / n) / 1e8, w - lr*g
+                w[0] = w[0] - lr * (sent["s"] / n / 1e8)
+                for b, r in by_bucket.items():
+                    w[b + 1] = w[b + 1] - lr * (r["s"] / n / 1e8)
+        finally:
+            tfa.unpersist()
 
     scored = (
         with_weights(sparse_feats(score, with_id=True), w[1:])
@@ -1754,32 +1752,31 @@ def hash_kernel_multiclass(
     else:
         tf = featurize(train, with_id=False, with_label=True).persist()
     w = {c: [0.0] * (d + 1) for c in classes}
-    from . import restore_stage_conf, set_iterative_stage_conf
+    from . import iterative_stage_conf
 
-    _conf = set_iterative_stage_conf(spark)
-    try:
-        for _ in range(iters):
-            # ONE bounded row for ALL classes; plan identical every step
-            row = tf.crossJoin(weight_row(w)).agg(*aggs).first()
-            n = row["n"]
-            if not n:
-                raise ValueError(
-                    "hash_kernel_multiclass: empty training slice — "
-                    "nothing to fit"
-                )
-            for c in classes:
-                i = ctag[c]
-                w[c][0] = w[c][0] - lr * (row[f"sb_{i}"] / n / 1e8)
-                for j in range(d):
-                    w[c][j + 1] = w[c][j + 1] - lr * (row[f"s_{i}_{j}"] / n / 1e8)
-    except BaseException:
-        if shared:
-            feats.unpersist()
-        raise
-    finally:
-        restore_stage_conf(spark, _conf)
-        if not shared:
-            tf.unpersist()
+    with iterative_stage_conf(spark):
+        try:
+            for _ in range(iters):
+                # ONE bounded row for ALL classes; plan identical every step
+                row = tf.crossJoin(weight_row(w)).agg(*aggs).first()
+                n = row["n"]
+                if not n:
+                    raise ValueError(
+                        "hash_kernel_multiclass: empty training slice — "
+                        "nothing to fit"
+                    )
+                for c in classes:
+                    i = ctag[c]
+                    w[c][0] = w[c][0] - lr * (row[f"sb_{i}"] / n / 1e8)
+                    for j in range(d):
+                        w[c][j + 1] = w[c][j + 1] - lr * (row[f"s_{i}_{j}"] / n / 1e8)
+        except BaseException:
+            if shared:
+                feats.unpersist()
+            raise
+        finally:
+            if not shared:
+                tf.unpersist()
 
     sf_feats = feats if shared else featurize(
         score, with_id=True, with_label=False
@@ -1985,51 +1982,50 @@ def _hash_kernel_multiclass_sparse(
         )
         GROUP BY z.cls, z.bucket
     """
-    from . import restore_stage_conf, set_iterative_stage_conf
+    from . import iterative_stage_conf
 
-    _conf = set_iterative_stage_conf(spark)
-    tfa = sparse_tok(train, with_id=False).persist()
-    w = {c: [0.0] * (d + 1) for c in classes}
-    try:
-        for _ in range(iters):
-            bdf = F.broadcast(
-                spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            f"__bias_{ci}": [w[c][0]]
-                            for ci, c in enumerate(classes)
-                        }
-                    ),
-                    schema=", ".join(
-                        f"__bias_{ci} double" for ci in range(K)
-                    ),
+    with iterative_stage_conf(spark):
+        tfa = sparse_tok(train, with_id=False).persist()
+        w = {c: [0.0] * (d + 1) for c in classes}
+        try:
+            for _ in range(iters):
+                bdf = F.broadcast(
+                    spark.createDataFrame(
+                        pd.DataFrame(
+                            {
+                                f"__bias_{ci}": [w[c][0]]
+                                for ci, c in enumerate(classes)
+                            }
+                        ),
+                        schema=", ".join(
+                            f"__bias_{ci} double" for ci in range(K)
+                        ),
+                    )
                 )
-            )
-            # ≤ K·(d+1) narrow rows — the only driver traffic (Arrow)
-            pdf = spark.sql(
-                step_sql, tok=tfa, w=weight_table(w), b=bdf
-            ).toPandas()
-            sent_mask = pdf["bucket"] == -1
-            sents = {
-                int(r.cls): (int(r.s), int(r.c))
-                for r in pdf[sent_mask].itertuples()
-            }
-            if 0 not in sents:
-                raise ValueError(
-                    "hash_kernel_multiclass: empty training slice — "
-                    "nothing to fit"
-                )
-            n = sents[0][1]
-            for ci, c in enumerate(classes):
-                w[c][0] = w[c][0] - lr * (sents[ci][0] / n / 1e8)
-            for r in pdf[~sent_mask].itertuples():
-                c = classes[int(r.cls)]
-                w[c][int(r.bucket) + 1] = w[c][int(r.bucket) + 1] - lr * (
-                    int(r.s) / n / 1e8
-                )
-    finally:
-        restore_stage_conf(spark, _conf)
-        tfa.unpersist()
+                # ≤ K·(d+1) narrow rows — the only driver traffic (Arrow)
+                pdf = spark.sql(
+                    step_sql, tok=tfa, w=weight_table(w), b=bdf
+                ).toPandas()
+                sent_mask = pdf["bucket"] == -1
+                sents = {
+                    int(r.cls): (int(r.s), int(r.c))
+                    for r in pdf[sent_mask].itertuples()
+                }
+                if 0 not in sents:
+                    raise ValueError(
+                        "hash_kernel_multiclass: empty training slice — "
+                        "nothing to fit"
+                    )
+                n = sents[0][1]
+                for ci, c in enumerate(classes):
+                    w[c][0] = w[c][0] - lr * (sents[ci][0] / n / 1e8)
+                for r in pdf[~sent_mask].itertuples():
+                    c = classes[int(r.cls)]
+                    w[c][int(r.bucket) + 1] = w[c][int(r.bucket) + 1] - lr * (
+                        int(r.s) / n / 1e8
+                    )
+        finally:
+            tfa.unpersist()
 
     heads = [
         F.struct(fold_pred(ci, w[c][0]).alias("s"), F.lit(c).alias("l"))

@@ -96,6 +96,65 @@ def _best_pair(
     return l, r, cnt, lcnt, rcnt, float(cnt) / (float(lcnt) * float(rcnt))
 
 
+def _best_pair_spark(
+    fused: DataFrame,
+) -> tuple[str, str, int, int, int, float] | None:
+    """The over-cap round: bring only the vocab-SIZED symbol counts to the
+    driver (the same bounded-driver-traffic contract as the 1-row argmax),
+    re-enter them into the pair scoring as one parsed map literal — or,
+    above a plan-size guard, as a broadcast-joined local table — in both
+    cases the same exact BIGINTs the join produced, so the score doubles
+    are bit-identical to ``_best_pair``'s."""
+    from .text import _qstr
+
+    spark = fused.sparkSession
+    scnt = {
+        r["a"]: int(r["cnt"]) for r in fused.filter(F.col("k") == "s").collect()
+    }
+    pc = fused.filter(F.col("k") == "p").select(
+        F.col("a").alias("l"), F.col("b").alias("r"), "cnt"
+    )
+    if len(scnt) <= 4096:
+        entries = ", ".join(f"{_qstr(tok)}, {c}L" for tok, c in sorted(scnt.items()))
+        looked = pc.selectExpr(
+            "l",
+            "r",
+            "cnt",
+            f"element_at(map({entries}), l) AS lcnt",
+            f"element_at(map({entries}), r) AS rcnt",
+        )
+    else:
+        sdf = F.broadcast(
+            spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "tok": list(scnt),
+                        "scnt": pd.Series(list(scnt.values()), dtype="int64"),
+                    }
+                )
+            )
+        )
+        looked = (
+            pc.join(sdf.withColumnRenamed("tok", "l"), "l")
+            .withColumnRenamed("scnt", "lcnt")
+            .join(F.broadcast(sdf.withColumnRenamed("tok", "r")), "r")
+            .withColumnRenamed("scnt", "rcnt")
+        )
+    score = F.col("cnt").cast("double") / (
+        F.col("lcnt").cast("double") * F.col("rcnt").cast("double")
+    )
+    top = (
+        looked.select("l", "r", "cnt", "lcnt", "rcnt", score.alias("score"))
+        .orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
+        .limit(1)
+        .collect()
+    )
+    if not top:
+        return None
+    t = top[0]
+    return (t["l"], t["r"], int(t["cnt"]), int(t["lcnt"]), int(t["rcnt"]), float(t["score"]))
+
+
 def wordpiece_word_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Distinct whitespace tokens with corpus frequencies and the
     ``##``-marked initial character segmentation (``hello`` →
@@ -199,8 +258,7 @@ def wordpiece_train(
     ``localCheckpoint``-materialized so plan depth stays O(1) (persist
     would keep the full fold lineage — the driver goes quadratic
     re-rendering plans; measured in ``bpe_train``'s in-loop comment)."""
-    from . import iterative_stage_conf
-    from .text import _qstr
+    from . import iterative_stage_conf, register_cache
 
     spark = docs.sparkSession
     rules: list[tuple[int, str, str, str, int, int, int, float]] = []
@@ -208,7 +266,8 @@ def wordpiece_train(
         # no eager count: the first round's fused-counts job populates
         # the persisted word table as a side effect of scanning it, so a
         # separate materialization job would be pure scheduler floor.
-        cur = wordpiece_word_table(docs, text_col).persist()
+        # Ledgered: with no merge round it is the returned word table.
+        cur = register_cache(wordpiece_word_table(docs, text_col))
         for rank in range(1, n_merges + 1):
             # ONE pass over the word table computes symbol and pair counts
             # together (r12; before: the symbol-count subtree was evaluated
@@ -217,92 +276,25 @@ def wordpiece_train(
             # table is vocabulary²-bounded; when it fits the driver cap the
             # whole table comes back in ONE collect and the score/argmax run
             # in pure Python, bit-identical to the distributed plan (see
-            # ``_best_pair``) — one job per round instead of two plus a
-            # persist.  Above the cap the round falls back to the
-            # distributed plan: persist the fused table, bring only the
-            # vocab-SIZED symbol counts to the driver (the same
-            # bounded-driver-traffic contract as the 1-row argmax), re-enter
-            # them into the pair scoring as one parsed map literal — or,
-            # above a plan-size guard, as a broadcast-joined local table —
-            # in both cases the same exact BIGINTs the join produced, so
-            # the score doubles are bit-identical.
-            probe = _fused_counts(cur).limit(_FUSED_COLLECT_CAP + 1).collect()
-            if len(probe) <= _FUSED_COLLECT_CAP:
-                scnt = {
-                    r["a"]: int(r["cnt"]) for r in probe if r["k"] == "s"
-                }
-                pairs = [
-                    (r["a"], r["b"], int(r["cnt"]))
-                    for r in probe
-                    if r["k"] == "p"
-                ]
-                if not pairs:
-                    break
-                l, r_, cnt, lcnt, rcnt, sc = _best_pair(scnt, pairs)
-            else:
-                fused = _fused_counts(cur).persist()
-                scnt = {
-                    r["a"]: int(r["cnt"])
-                    for r in fused.filter(F.col("k") == "s").collect()
-                }
-                pc = fused.filter(F.col("k") == "p").select(
-                    F.col("a").alias("l"), F.col("b").alias("r"), "cnt"
-                )
-                if len(scnt) <= 4096:
-                    entries = ", ".join(
-                        f"{_qstr(tok)}, {c}L" for tok, c in sorted(scnt.items())
-                    )
-                    looked = pc.selectExpr(
-                        "l",
-                        "r",
-                        "cnt",
-                        f"element_at(map({entries}), l) AS lcnt",
-                        f"element_at(map({entries}), r) AS rcnt",
-                    )
+            # ``_best_pair``) — one job per round.  Above the cap the round
+            # falls back to ``_best_pair_spark`` over the same persisted
+            # fused table, so the probe's work is not redone.
+            fused = _fused_counts(cur).persist()
+            try:
+                probe = fused.limit(_FUSED_COLLECT_CAP + 1).collect()
+                if len(probe) <= _FUSED_COLLECT_CAP:
+                    scnt = {r["a"]: int(r["cnt"]) for r in probe if r["k"] == "s"}
+                    pairs = [
+                        (r["a"], r["b"], int(r["cnt"])) for r in probe if r["k"] == "p"
+                    ]
+                    best = _best_pair(scnt, pairs) if pairs else None
                 else:
-                    sdf = F.broadcast(
-                        spark.createDataFrame(
-                            pd.DataFrame(
-                                {
-                                    "tok": list(scnt),
-                                    "scnt": pd.Series(
-                                        list(scnt.values()), dtype="int64"
-                                    ),
-                                }
-                            )
-                        )
-                    )
-                    looked = (
-                        pc.join(sdf.withColumnRenamed("tok", "l"), "l")
-                        .withColumnRenamed("scnt", "lcnt")
-                        .join(
-                            F.broadcast(sdf.withColumnRenamed("tok", "r")), "r"
-                        )
-                        .withColumnRenamed("scnt", "rcnt")
-                    )
-                score = F.col("cnt").cast("double") / (
-                    F.col("lcnt").cast("double") * F.col("rcnt").cast("double")
-                )
-                top = (
-                    looked.select(
-                        "l", "r", "cnt", "lcnt", "rcnt", score.alias("score")
-                    )
-                    .orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
-                    .limit(1)
-                    .collect()
-                )
+                    best = _best_pair_spark(fused)
+            finally:
                 fused.unpersist()
-                if not top:
-                    break
-                t = top[0]
-                l, r_, cnt, lcnt, rcnt, sc = (
-                    t["l"],
-                    t["r"],
-                    int(t["cnt"]),
-                    int(t["lcnt"]),
-                    int(t["rcnt"]),
-                    float(t["score"]),
-                )
+            if best is None:
+                break
+            l, r_, cnt, lcnt, rcnt, sc = best
             merged = l + r_[2:]
             rules.append((rank, l, r_, merged, cnt, lcnt, rcnt, sc))
             nxt = cur.withColumn(

@@ -390,12 +390,12 @@ class Session:
             if td.managed:
                 from .dml import store as _store
 
-                parts = _store._parts(td)
+                parts, tombs = _store.table_files(td)
                 nbytes = sum(os.path.getsize(p) for p in parts)
                 extra = (
                     f"managed, {len(parts)} parts, {nbytes} bytes, "
-                    f"{len(_store._tombstone_parts(td))} tombstone files, "
-                    f"{len(_store._snapshot_files(td))} snapshots, "
+                    f"{len(tombs)} tombstone files, "
+                    f"{len(_store.list_snapshots(td))} snapshots, "
                     f"id_col={td.id_col}"
                 )
             else:

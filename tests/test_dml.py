@@ -171,8 +171,8 @@ def test_with_sequential_id_is_dense(spark):
 
 
 def test_targeted_upsert_rewrites_only_affected_parts(spark, tmp_path):
-    """Force the targeted MERGE path: parts whose id range the upsert does
-    not touch must keep their original file, byte for byte."""
+    """Parts whose footer id range the upsert does not touch must keep
+    their original file, byte for byte."""
     import os
 
     from interference_spark import Engine
@@ -185,7 +185,7 @@ def test_targeted_upsert_rewrites_only_affected_parts(spark, tmp_path):
     before = {f: os.path.getmtime(f) for f in store._parts(td)}
     assert len(before) == 3
     new = spark.createDataFrame([(250, -1), (300, -2)], "id long, val long")
-    store.upsert(spark, td, new, full_rewrite_max_bytes=0)  # force targeted
+    store.upsert(spark, td, new)
     after = set(store._parts(td))
     untouched = {f for f, m in before.items() if f in after}
     # the two parts not containing id 250 survive physically
@@ -647,9 +647,9 @@ def test_zorder_tightens_stats_in_all_dimensions(engine, spark):
 
 
 def test_targeted_upsert_in_warehouse_with_spaces(spark, tmp_path):
-    """input_file_name() returns percent-encoded URIs; the targeted MERGE
-    must still locate affected parts when the warehouse path needs
-    encoding — a miss would silently produce duplicate @Id rows."""
+    """The MERGE must still find the affected parts when the warehouse
+    path needs URI encoding (spaces, non-ASCII) — a miss would silently
+    produce duplicate @Id rows."""
     from interference_spark import Engine
     from interference_spark.dml import store
 
@@ -658,10 +658,65 @@ def test_targeted_upsert_in_warehouse_with_spaces(spark, tmp_path):
     for start in (0, 100, 200):
         store.append_rows(td, [{"id": i, "val": i} for i in range(start, start + 100)])
     new = spark.createDataFrame([(150, -1)], "id long, val long")
-    store.upsert(spark, td, new, full_rewrite_max_bytes=0)  # force targeted
+    store.upsert(spark, td, new)
     rows = eng.table("kvs").filter("id = 150").collect()
     assert [(r["id"], r["val"]) for r in rows] == [(150, -1)]  # ONE row, updated
     assert eng.table("kvs").count() == 300
+
+
+def test_upsert_folds_pending_tombstones_without_compact(
+    session, engine, fresh, monkeypatch
+):
+    """An upsert after a delete is ONE merge: it rewrites every part with
+    the tombstones folded in, so a re-inserted tombstoned id comes back
+    with no separate compaction and no tombstone file left behind."""
+    td = engine.catalog.get(fresh)
+    for start in (0, 10):
+        store.append_rows(
+            td, [{"id": start + i, "val": start + i, "tag": "x"} for i in range(10)]
+        )
+    session.delete(fresh, 3)
+    session.commit()
+    assert store.table_files(td)[1], "the delete left a tombstone"
+    calls = []
+    real_compact = store.compact
+    monkeypatch.setattr(
+        store, "compact", lambda *a, **k: calls.append(1) or real_compact(*a, **k)
+    )
+    session.persist(fresh, [{"id": 3, "val": 33, "tag": "back"},
+                            {"id": 12, "val": 120, "tag": "y"}])
+    session.commit()
+    assert calls == []
+    assert store.table_files(td)[1] == []
+    rows = engine.table(fresh).collect()
+    assert len(rows) == len({r["id"] for r in rows}) == 20
+    got = {r["id"]: (r["val"], r["tag"]) for r in rows}
+    assert got[3] == (33, "back") and got[12] == (120, "y") and got[4] == (4, "x")
+
+
+def test_upsert_id_range_from_any_dataframe(spark, tmp_path):
+    """The new ids' range comes from parquet footers for a bare parquet scan
+    and from one aggregate for any other DataFrame; both prune the same
+    parts and give the same rows."""
+    from pyspark.sql import functions as F
+
+    from interference_spark import Engine
+
+    eng = Engine(spark=spark, warehouse=str(tmp_path / "wh"))
+    td = eng.register_table("kr", "id long, val long", id_col="id")
+    for start in (0, 100, 200):
+        store.append_rows(td, [{"id": i, "val": i} for i in range(start, start + 100)])
+    staged, _path = store.stage_rows(spark, td, [{"id": 120, "val": -1}])
+    derived = spark.range(130, 132).select(F.col("id"), F.lit(-2).cast("long").alias("val"))
+    assert store._id_range(staged, "id") == (120, 120)
+    assert store._id_range(derived, "id") == (130, 131)
+    before = set(store._parts(td))
+    store.upsert(spark, td, staged)
+    store.upsert(spark, td, derived)
+    assert len(before & set(store._parts(td))) == 2  # ids 0-99, 200-299 untouched
+    rows = {r["id"]: r["val"] for r in eng.table("kr").collect()}
+    assert len(rows) == 300 and eng.table("kr").count() == 300
+    assert rows[120] == -1 and rows[130] == rows[131] == -2 and rows[129] == 129
 
 
 def test_snapshot_time_travel_survives_rewrites(session, engine, fresh):

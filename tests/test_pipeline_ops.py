@@ -3776,3 +3776,98 @@ def test_hash_kernel_train_filter_bit_identical_to_classic(spark):
         hash_kernel_classifier(
             None, df, d=4, iters=1, impl="sparse", train_filter="1=1"
         )
+
+
+def _bits(arr):
+    """Bit patterns of a (nested) double array, so NaN compares equal."""
+    import struct
+
+    return [_bits(v) if isinstance(v, list) else struct.pack(">d", v) for v in arr]
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        [float("nan"), 1.5],
+        [float("inf"), -2.0],
+        [float("-inf")],
+        [-0.0, 0.0, 5e-324],
+        [0.1, float("nan"), float("inf"), float("-inf"), -0.0],
+    ],
+)
+def test_lit_double_helpers_match_lit_loop(spark, values):
+    """The one-parse literal builders give the same type and the same bits
+    as the per-element F.lit construction, non-finite values included."""
+    from interference_spark.pipeline import lit_double_array, lit_double_matrix
+
+    one = spark.range(1)
+    cases = [
+        (lit_double_array(values), F.array(*[F.lit(v) for v in values])),
+        (
+            lit_double_matrix([values, values[::-1]]),
+            F.array(*[F.array(*[F.lit(v) for v in r]) for r in (values, values[::-1])]),
+        ),
+    ]
+    for got, want in cases:
+        g, w = one.select(got.alias("a")), one.select(want.alias("a"))
+        assert g.schema == w.schema
+        assert _bits(g.first()["a"]) == _bits(w.first()["a"])
+
+
+@pytest.mark.parametrize(
+    "values",
+    [[-(2**31)], [-(2**31), 7], [2**31 - 1, -(2**31)], [-(2**31), 2**31], [-(2**31) - 1, 0]],
+)
+def test_lit_int_array_matches_lit_loop(spark, values):
+    from interference_spark.pipeline import lit_int_array
+
+    one = spark.range(1)
+    g = one.select(lit_int_array(values).alias("a"))
+    w = one.select(F.array(*[F.lit(v) for v in values]).alias("a"))
+    assert g.schema == w.schema
+    assert g.first()["a"] == w.first()["a"] == values
+
+
+def test_wordpiece_over_cap_fallback_matches_driver_argmax(spark, monkeypatch):
+    """A fused count table above _FUSED_COLLECT_CAP takes the distributed
+    argmax; its rules must equal the default-cap (driver argmax) rules."""
+    from interference_spark.pipeline import wordpiece
+
+    docs = spark.createDataFrame(
+        [(0, "hugging hugs bug bugs " * 3 + "pun puns hug"), (1, "gun guns hun")],
+        "doc_id long, text string",
+    )
+    want = [tuple(r) for r in wordpiece.wordpiece_train(docs, n_merges=5)[0].collect()]
+    monkeypatch.setattr(wordpiece, "_FUSED_COLLECT_CAP", 3)
+    calls = []
+    real = wordpiece._best_pair_spark
+    monkeypatch.setattr(
+        wordpiece, "_best_pair_spark", lambda fused: calls.append(1) or real(fused)
+    )
+    got = [tuple(r) for r in wordpiece.wordpiece_train(docs, n_merges=5)[0].collect()]
+    assert len(calls) == 5
+    assert got == want and len(want) == 5
+
+
+@pytest.mark.parametrize("trainer", ["wordpiece", "bpe"])
+def test_zero_merge_word_table_is_released(spark, trainer):
+    """With n_merges=0 the persisted initial word table is the returned
+    one; it is ledger-registered, so release_caches() unpins it."""
+    from interference_spark.pipeline import release_caches
+    from interference_spark.pipeline.bpe import bpe_train
+    from interference_spark.pipeline.wordpiece import wordpiece_train
+
+    train = wordpiece_train if trainer == "wordpiece" else bpe_train
+    release_caches()
+    jsc = spark.sparkContext._jsc
+
+    def pinned():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = pinned()
+    docs = spark.createDataFrame([(0, "low lower lowest")], "doc_id long, text string")
+    _merges, words = train(docs, n_merges=0)
+    assert words.count() == 3
+    assert pinned() - before, "the word table should be cached"
+    release_caches()
+    assert pinned() - before == set()
