@@ -18,9 +18,11 @@ this module keeps is the *operation surface*:
                          a computed file set.  With a tombstone pending, every
                          part is rewritten (folding the tombstones in);
                          otherwise only the parts whose parquet-footer id
-                         min/max overlaps the upserted ids' [min, max].  The
-                         chosen parts minus the new ids, plus the new rows,
-                         are written as fresh parts and the old ones retired.
+                         min/max overlaps the upserted ids' [min, max], or,
+                         when none does, the smallest part under
+                         ``TARGET_PART_BYTES``.  The chosen parts minus the
+                         new ids, plus the new rows, are written as fresh
+                         parts and the old ones retired.
 * ``add_tombstones`` / ``maybe_compact`` — THE delete path (transactional
                          delete / CEP ``purge``, routed via
                          ``session.py`` commit): deletes write id
@@ -51,7 +53,6 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyarrow.fs import FileSystem
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -208,8 +209,7 @@ def stage_rows(spark: SparkSession, td: TableDef, rows: list[dict]) -> tuple[Dat
     MERGE path: a parallelize-based DataFrame drags a Python-runner stage
     into the merge plan, which under the output-sizing ``coalesce`` runs
     single-worker-serialized (measured: 4.5 s vs 0.9 s for the same 10k-row
-    upsert). A parquet scan keeps the whole merge JVM-side, and ``upsert``
-    reads the batch's id range from its footer."""
+    upsert). A parquet scan keeps the whole merge JVM-side."""
     path = td.path + f".stage-{uuid.uuid4().hex}.parquet"
     pq.write_table(_arrow_table(td, rows), path, compression="zstd")
     return spark.read.schema(td.require_schema()).parquet(path), path
@@ -319,11 +319,11 @@ def _n_parts(files: list[str]) -> int:
     return max(1, -(-sum(os.path.getsize(f) for f in files) // TARGET_PART_BYTES))
 
 
-def _footer_range(path: str, id_col: str, filesystem=None) -> tuple | None:
+def _footer_range(path: str, id_col: str) -> tuple | None:
     """(min, max) of ``id_col`` from a parquet footer, or None when a row
     group lacks exact statistics. Floating ids never count as exact:
     parquet min/max leave NaN out."""
-    md = pq.read_metadata(path, filesystem=filesystem)
+    md = pq.read_metadata(path)
     lo = hi = None
     for g in range(md.num_row_groups):
         rg = md.row_group(g)
@@ -339,30 +339,12 @@ def _footer_range(path: str, id_col: str, filesystem=None) -> tuple | None:
     return None if lo is None else (lo, hi)
 
 
-def _id_range(df: DataFrame, id_col: str) -> tuple:
-    """[min, max] of ``df``'s ids. A bare parquet scan (``stage_rows``'s
-    output, the commit path) answers from its footers with no Spark job;
-    any other DataFrame costs one aggregate job."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRelation":
-        try:
-            bounds = [
-                _footer_range(path, id_col, fs)
-                for fs, path in map(FileSystem.from_uri, df.inputFiles())
-            ]
-        except (OSError, ValueError):  # not a parquet file pyarrow can open
-            bounds = []
-        if bounds and None not in bounds:
-            return min(b[0] for b in bounds), max(b[1] for b in bounds)
-    return tuple(df.agg(F.min(id_col), F.max(id_col)).first())
-
-
 def _may_hold(bounds: tuple | None, lo, hi) -> bool:
     if bounds is None:
         return True
     try:
         return not (bounds[1] < lo or hi < bounds[0])
-    except TypeError:  # no range (empty batch), or incomparable stats
+    except TypeError:  # footer stats of a type the batch's ids don't compare with
         return True
 
 
@@ -374,24 +356,37 @@ def upsert(spark: SparkSession, td: TableDef, new_df: DataFrame) -> None:
     part is rewritten and the tombstones fold in (a re-inserted id must not
     stay hidden). Otherwise only the parts whose footer id range overlaps
     the new ids' [min, max] are rewritten (the Delta MERGE file-pruning
-    pattern, with no locate job): with id-clustered inserts (ring tables,
-    incremental ids) an upsert touches one or two parts of a 100 TB table.
-    The chosen parts minus the new ids, plus the new rows, are written as
-    ⌈bytes / TARGET_PART_BYTES⌉ parts and the old files retired.
+    pattern, with no locate job); the range costs one aggregate job,
+    skipped when the table is one part with room. Ids beyond every part's
+    range (ring tables, incremental ids) fold into the smallest part under
+    TARGET_PART_BYTES, so fresh-id commits do not add a part each; with no
+    such part, or no part at all, the new rows are appended with their own
+    partitioning. The chosen parts minus the new ids, plus the new rows,
+    are written as ⌈rewritten bytes / TARGET_PART_BYTES⌉ parts and the old
+    files retired.
     """
     if td.id_col is None:
         raise InvalidParameter(f"table {td.name} has no @Id column; use append")
+    new_rows = new_df.select(*[f.name for f in td.require_schema().fields])
     parts, tombs = table_files(td)
-    if tombs:
-        rewrite = parts
-    else:
-        lo, hi = _id_range(new_df, td.id_col)
+    room = [f for f in parts if os.path.getsize(f) < TARGET_PART_BYTES]
+    rewrite = parts
+    # the ids' range can only narrow a choice: one part with room is
+    # rewritten whatever the range, so no job is spent on it then
+    if parts and not tombs and not (len(parts) == 1 and room):
+        lo, hi = new_df.agg(F.min(td.id_col), F.max(td.id_col)).first()
+        if lo is None:  # empty batch
+            return
         rewrite = [f for f in parts if _may_hold(_footer_range(f, td.id_col), lo, hi)]
-    cols = [f.name for f in td.require_schema().fields]
+        if not rewrite and room:
+            rewrite = [min(room, key=os.path.getsize)]
+    if not rewrite and not tombs:  # no part, or none with room
+        append_df(td, new_rows)
+        return
     merged = (
         read_files(spark, td, rewrite, tombs)
         .join(F.broadcast(new_df.select(td.id_col)), td.id_col, "left_anti")
-        .unionByName(new_df.select(*cols))
+        .unionByName(new_rows)
         .coalesce(_n_parts(rewrite))
     )
     # scoped AQE conf: the merge's shuffles are batch-sized while the

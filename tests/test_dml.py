@@ -695,9 +695,8 @@ def test_upsert_folds_pending_tombstones_without_compact(
 
 
 def test_upsert_id_range_from_any_dataframe(spark, tmp_path):
-    """The new ids' range comes from parquet footers for a bare parquet scan
-    and from one aggregate for any other DataFrame; both prune the same
-    parts and give the same rows."""
+    """A staged parquet batch and a derived DataFrame both prune by their
+    ids' [min, max]: parts outside it keep their files, rows are merged."""
     from pyspark.sql import functions as F
 
     from interference_spark import Engine
@@ -708,8 +707,6 @@ def test_upsert_id_range_from_any_dataframe(spark, tmp_path):
         store.append_rows(td, [{"id": i, "val": i} for i in range(start, start + 100)])
     staged, _path = store.stage_rows(spark, td, [{"id": 120, "val": -1}])
     derived = spark.range(130, 132).select(F.col("id"), F.lit(-2).cast("long").alias("val"))
-    assert store._id_range(staged, "id") == (120, 120)
-    assert store._id_range(derived, "id") == (130, 131)
     before = set(store._parts(td))
     store.upsert(spark, td, staged)
     store.upsert(spark, td, derived)
@@ -717,6 +714,49 @@ def test_upsert_id_range_from_any_dataframe(spark, tmp_path):
     rows = {r["id"]: r["val"] for r in eng.table("kr").collect()}
     assert len(rows) == 300 and eng.table("kr").count() == 300
     assert rows[120] == -1 and rows[130] == rows[131] == -2 and rows[129] == 129
+
+
+def test_fresh_id_commits_keep_one_part(session, engine, fresh):
+    """Commits of ever-increasing new ids overlap no part's id range; they
+    fold into the one small part instead of adding a part per commit."""
+    td = engine.catalog.get(fresh)
+    for trial in range(5):
+        session.persist(
+            fresh, [{"id": trial * 10 + i, "val": i, "tag": "t"} for i in range(10)]
+        )
+        session.commit()
+        assert len(store._parts(td)) == 1, f"trial {trial} added a part"
+    rows = engine.table(fresh).collect()
+    assert sorted(r["id"] for r in rows) == list(range(50))
+
+
+def test_upsert_appends_with_own_partitioning_when_no_part_has_room(
+    spark, tmp_path, monkeypatch
+):
+    """Into an empty table, or one whose parts are all full and miss the new
+    ids, an upsert appends the rows as written by the DataFrame's own tasks
+    and leaves the existing parts alone."""
+    from pyspark.sql import functions as F
+
+    from interference_spark import Engine
+
+    eng = Engine(spark=spark, warehouse=str(tmp_path / "wh"))
+    td = eng.register_table("bulk", "id long, val long", id_col="id")
+
+    def batch(lo):
+        return spark.range(lo, lo + 400, numPartitions=4).select(
+            F.col("id"), (F.col("id") * 2).alias("val")
+        )
+
+    store.upsert(spark, td, batch(0))
+    first = set(store._parts(td))
+    assert len(first) == 4
+    monkeypatch.setattr(store, "TARGET_PART_BYTES", 1)  # every part is full
+    store.upsert(spark, td, batch(1000))
+    after = set(store._parts(td))
+    assert first < after and len(after) == 8
+    rows = {r["id"]: r["val"] for r in eng.table("bulk").collect()}
+    assert rows == {i: 2 * i for i in [*range(400), *range(1000, 1400)]}
 
 
 def test_snapshot_time_travel_survives_rewrites(session, engine, fresh):
